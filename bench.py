@@ -19,8 +19,9 @@ Sections (tools/bench_section.py):
 
 Integrity rule (r9 verdict #1): timed entries may not read ANY
 cross-call cache — every warm-up/timed pass recomputes from the
-parquet inputs (the connected-components memo is disabled in the
-benched registry bodies for exactly this reason).
+parquet inputs, so t19's timed pass rebuilds its IVF index and
+t30/t37 rerun label propagation, as the warm-up did
+(tests/test_operators.py::TestBenchHonesty).
 
 Why subprocesses (r5 change, VERDICT r4 "What's wrong" #1-2): the r4
 monolithic bench ran everything in one aging SparkSession; late

@@ -1543,7 +1543,7 @@ class Engine:
     # threshold AQE keeps runtime coalescing + skew-join splitting —
     # the 100 TB story; any real table blows past this on its first
     # leaf.
-    SMALL_SCAN_BYTES = int(os.environ.get("MOOSPARK_SMALL_SCAN_BYTES", str(64 << 20)))
+    SMALL_SCAN_BYTES = 64 << 20
 
     def _plan_select(self, prepared: str) -> DataFrame:
         """spark.sql + the small-scan fast path (static planning).
@@ -1567,47 +1567,23 @@ class Engine:
             if early is not None:
                 return early, "static"
         df = self.spark.sql(prepared)
-        up = prepared.upper()
-        if "GROUP" in up:
-            # Aggregate-shape rewrites (plans/agg_split.py; both are
-            # conservative single-block shape matches that fall back
-            # to the original plan on any analysis error):
-            # 1. ON by default — drop GROUP BY keys that are
-            #    deterministic expressions over the remaining simple
-            #    keys (grouping by (k, f(k)) ≡ grouping by (k);
-            #    narrower shuffle rows, fewer hashed exprs — cb35
-            #    14.5 → 10.9 s at 100M, PROBE_AGGSPLIT_100M.json);
-            # 2. OPT-IN (MOOSPARK_AGG_SPLIT=1) — split DISTINCT agg +
-            #    string MIN/MAX into two joined passes. Measured and
-            #    REJECTED as a default at 100M: cb22's filter passes
-            #    ~1.3% of rows, so the single SortAggregate pipeline
-            #    costs less than the second scan of the wide string
-            #    columns (2.2 s single-pass vs 4.3 s split, same
-            #    artifact). It pays only when the post-filter row
-            #    count rivals the scan, so it stays available for
-            #    high-selectivity workloads rather than default-on.
+        if "GROUP" in prepared.upper():
+            # Drop GROUP BY keys that are deterministic expressions
+            # over the remaining simple keys (grouping by (k, f(k)) ≡
+            # grouping by (k); narrower shuffle rows, fewer hashed
+            # exprs — cb35 14.5 → 10.9 s at 100M,
+            # PROBE_AGGSPLIT_100M.json). A conservative single-block
+            # shape match (plans/agg_split.py) that falls back to the
+            # original plan on any analysis error.
             df0 = df
             try:
-                from .plans.agg_split import (
-                    maybe_split_distinct_minmax,
-                    reduce_group_keys,
-                )
+                from .plans.agg_split import reduce_group_keys
 
-                work = prepared
-                red = reduce_group_keys(work)
+                red = reduce_group_keys(prepared)
                 if red is not None:
-                    df, work = self.spark.sql(red), red
+                    df = self.spark.sql(red)
             except Exception:
-                df, work = df0, prepared
-            if "DISTINCT" in up and os.environ.get("MOOSPARK_AGG_SPLIT") == "1":
-                # separate guard: a split failure must not roll back a
-                # reduction that already analyzed
-                try:
-                    split = maybe_split_distinct_minmax(work, df.schema)
-                    if split is not None:
-                        df = self.spark.sql(split)
-                except Exception:
-                    pass
+                df = df0
         try:
             if self.spark.conf.get("spark.sql.adaptive.enabled") != "true":
                 return df, "plain"

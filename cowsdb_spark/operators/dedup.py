@@ -21,8 +21,6 @@ whole-stage codegen; no Python UDF anywhere.
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -783,11 +781,9 @@ def ngram_jaccard_pairs(
     # §2b shared-subtree pattern — the gram pipeline runs once per
     # pair side without it). Interleaved A/B at sf0.1: t08 min 1.92 →
     # 2.17 s (materializing corpus-sized gram ARRAYS costs more than
-    # the saved second gram pass), and the fresh checkpoint RDD per
-    # call busts connected_components' reuse_cache key for t30/t37
-    # (jobs 4 → 39 / 14 → 49, walls 0.4 → 3.2 / 1.0 → 4.3 s). Unlike
-    # the §2b LSH signature frame (slim fixed-width signatures), the
-    # duplicated subtree here is cheaper than its materialization.
+    # the saved second gram pass). Unlike the §2b LSH signature frame
+    # (slim fixed-width signatures), the duplicated subtree here is
+    # cheaper than its materialization.
     out = (
         pairs.join(g.withColumnRenamed(id_col, "id_a").withColumnRenamed("_g", "_ga"), "id_a")
         .join(g.withColumnRenamed(id_col, "id_b").withColumnRenamed("_g", "_gb"), "id_b")
@@ -797,15 +793,6 @@ def ngram_jaccard_pairs(
     return out.select(
         "id_a", "id_b", F.round(inter / union, 4).alias("jaccard")
     )
-
-
-# (df identity, n_blocks) → (df ref, assigned, centroid matrix, radii).
-# The angular IVF screen index is built once per input table, like any
-# real vector index; entries hold a strong df ref so id() stays valid.
-# Bounded LRU (a long-lived server indexing many tables must not pin
-# every DataFrame it ever saw — that leaks driver memory and blocks GC).
-_IVF_INDEX_CACHE: OrderedDict = OrderedDict()
-_IVF_INDEX_CACHE_MAX = 4
 
 
 def embedding_neardup_pairs(
@@ -879,61 +866,45 @@ def embedding_neardup_pairs(
     slack = threshold - 1e-6
     B = n_blocks
 
-    # The angular index (blocks + radii) is threshold-independent and
-    # depends only on the input DataFrame — build once per (df, B),
-    # like a real engine builds an IVF index once per table. The cache
-    # holds a strong ref to `emb` so id() can't be reused.
-    key = (id(emb), B)
-    hit = _IVF_INDEX_CACHE.get(key)
-    if hit is not None and hit[0] is emb:
-        _IVF_INDEX_CACHE.move_to_end(key)
-        _, assigned, cent_arr, delta = hit
-    else:
-        # angular blocks + exact per-block radii (δ_k); the assignment
-        # is JVM-side, the two driver collects are O(sample) and O(B)
-        assigned, centroids = ivf_build(
-            emb, n_centroids=B, id_col=id_col, vec_col=vec_col
-        )
-        cent_arr = np.asarray(centroids, dtype=float)
-        cnorm = np.linalg.norm(cent_arr, axis=1)
-        cnorm[cnorm == 0] = 1e-12
-        unit_cents = cent_arr / cnorm[:, None]
-        # one flat literal array of unit centroids + a single zip_with
-        # dot per row (a per-centroid sum-of-element_at expansion was a
-        # ~10× bigger Catalyst tree, ~12s of analysis at B=8, dim=64)
-        cents_lit = F.array(
-            *[F.array(*[F.lit(float(x)) for x in c]) for c in unit_cents]
-        )
-        cvec = F.element_at(cents_lit, F.col("_cell") + 1)
-        member_cos = F.aggregate(
-            F.zip_with("_v", cvec, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ) / F.greatest(
-            F.sqrt(
-                F.aggregate("_v", F.lit(0.0), lambda a, x: a + x * x)
-            ),
-            F.lit(1e-12),
-        )
-        radii_rows = (
-            assigned.select(F.col("_cell"), member_cos.alias("_c"))
-            .groupBy("_cell")
-            .agg(F.min("_c").alias("min_cos"))
-            .collect()
-        )
-        delta = {
-            int(r["_cell"]): math.acos(max(-1.0, min(1.0, r["min_cos"])))
-            for r in radii_rows
-        }
-        _IVF_INDEX_CACHE[key] = (emb, assigned, cent_arr, delta)
-        while len(_IVF_INDEX_CACHE) > _IVF_INDEX_CACHE_MAX:
-            _IVF_INDEX_CACHE.popitem(last=False)
+    # angular blocks + exact per-block radii (δ_k); the assignment
+    # is JVM-side, the two driver collects are O(sample) and O(B)
+    assigned, centroids = ivf_build(
+        emb, n_centroids=B, id_col=id_col, vec_col=vec_col
+    )
+    cent_arr = np.asarray(centroids, dtype=float)
+    cnorm = np.linalg.norm(cent_arr, axis=1)
+    cnorm[cnorm == 0] = 1e-12
+    unit_cents = cent_arr / cnorm[:, None]
+    # one flat literal array of unit centroids + a single zip_with
+    # dot per row (a per-centroid sum-of-element_at expansion was a
+    # ~10× bigger Catalyst tree, ~12s of analysis at B=8, dim=64)
+    cents_lit = F.array(
+        *[F.array(*[F.lit(float(x)) for x in c]) for c in unit_cents]
+    )
+    cvec = F.element_at(cents_lit, F.col("_cell") + 1)
+    member_cos = F.aggregate(
+        F.zip_with("_v", cvec, lambda a, b: a * b),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    ) / F.greatest(
+        F.sqrt(
+            F.aggregate("_v", F.lit(0.0), lambda a, x: a + x * x)
+        ),
+        F.lit(1e-12),
+    )
+    radii_rows = (
+        assigned.select(F.col("_cell"), member_cos.alias("_c"))
+        .groupBy("_cell")
+        .agg(F.min("_c").alias("min_cos"))
+        .collect()
+    )
+    delta = {
+        int(r["_cell"]): math.acos(max(-1.0, min(1.0, r["min_cos"])))
+        for r in radii_rows
+    }
 
     theta_max = math.acos(max(-1.0, min(1.0, slack)))  # pairs beyond this angle can't match
-    cn = np.linalg.norm(cent_arr, axis=1)
-    cn[cn == 0] = 1e-12
-    unit = cent_arr / cn[:, None]
-    cang = np.arccos(np.clip(unit @ unit.T, -1.0, 1.0))
+    cang = np.arccos(np.clip(unit_cents @ unit_cents.T, -1.0, 1.0))
     surviving = [
         (i, j)
         for i in range(B)
@@ -1027,16 +998,11 @@ def embedding_neardup_pairs(
     )
 
 
-_CC_CACHE: OrderedDict = OrderedDict()
-_CC_CACHE_MAX = 4
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 50,
-    reuse_cache: bool = False,
 ) -> DataFrame:
     """Cluster near-duplicate pairs into components: (id, component)
     where ``component`` is the minimum node id reachable from ``id``.
@@ -1060,26 +1026,8 @@ def connected_components(
     their own singleton clusters; callers left-join if they need
     them). Deterministic: min-labels do not depend on partitioning.
     """
-    cache_key = None
-    if reuse_cache:
-        # Memoize the label frame per edge-set plan (semanticHash of
-        # the analyzed plan): a dedup pipeline runs pairs -> clusters
-        # -> survivors over the same edges, and the iterative pass is
-        # the expensive step. Opt-in because the hash keys the PLAN —
-        # appending files under an unchanged source path would not
-        # miss; callers enable it for immutable inputs only.
-        try:
-            cache_key = (
-                int(edges._jdf.queryExecution().analyzed().semanticHash()),  # noqa: SLF001
-                src,
-                dst,
-            )
-            hit = _CC_CACHE.get(cache_key)
-            if hit is not None:
-                _CC_CACHE.move_to_end(cache_key)
-                return hit
-        except Exception:  # noqa: BLE001
-            cache_key = None
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     e = edges.select(
         F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
     )
@@ -1163,11 +1111,6 @@ def connected_components(
         if cur == prev_sum:
             break
         prev_sum = cur
-    if cache_key is not None:
-        _CC_CACHE[cache_key] = lab
-        _CC_CACHE.move_to_end(cache_key)
-        while len(_CC_CACHE) > _CC_CACHE_MAX:
-            _CC_CACHE.popitem(last=False)
     return lab
 
 

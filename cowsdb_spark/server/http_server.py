@@ -403,19 +403,3 @@ def serve_background(engine: Engine, host: str = "127.0.0.1", port: int = 8123):
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     return srv
-
-
-def main():
-    import argparse
-
-    p = argparse.ArgumentParser(description="moospark ClickHouse-compatible HTTP server")
-    p.add_argument("--host", default="0.0.0.0")
-    p.add_argument("--port", type=int, default=8123)
-    args = p.parse_args()
-    srv = make_server(Engine(), args.host, args.port)
-    print(f"moospark HTTP API: http://{args.host}:{args.port}")
-    srv.serve_forever()
-
-
-if __name__ == "__main__":
-    main()

@@ -414,23 +414,3 @@ class NativeServer:
             # framed (clickhouse-driver's reader splits exactly there)
             body = compress_frame(body, METHOD_LZ4)
         return write_varint(ServerPacket.DATA) + write_varstr("") + body
-
-
-def main():
-    import argparse
-
-    p = argparse.ArgumentParser(description="moospark native TCP server")
-    p.add_argument("--host", default="0.0.0.0")
-    p.add_argument("--port", type=int, default=9000)
-    args = p.parse_args()
-    srv = NativeServer(Engine(), args.host, args.port)
-    srv.start_background()
-    print(f"moospark native protocol: {args.host}:{srv.port}")
-    import time
-
-    while True:
-        time.sleep(3600)
-
-
-if __name__ == "__main__":
-    main()

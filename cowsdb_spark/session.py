@@ -68,10 +68,10 @@ def get_spark(app_name: str = "moospark", shuffle_partitions: int | None = None)
         # Throughput collector over G1: the analytics hot path churns
         # short-lived UnsafeRow/string garbage across 32 task threads,
         # and G1's mixed-collection pauses land mid-query — measured on
-        # the variance-prone 10M subset (tools/probe_gc.py, 7 reps,
-        # fresh JVM per config): G1 median-total 6.51s with cb23
-        # swinging 0.42-3.10s vs ParallelGC 4.93s with cb23 at
-        # 0.34-0.65s; GC time 4.0s -> 2.4s. ZGC and G1+pause-target
+        # the variance-prone 10M subset (r5 A/B recorded in
+        # BASELINE.md, 7 reps, fresh JVM per config): G1 median-total
+        # 6.51s with cb23 swinging 0.42-3.10s vs ParallelGC 4.93s with
+        # cb23 at 0.34-0.65s; GC time 4.0s -> 2.4s. ZGC and G1+pause-target
         # landed between. Cluster analog: executor GC choice is a
         # per-deployment JVM flag, same lever.
         # 512m code cache (JDK default 240m): every distinct query
@@ -115,8 +115,8 @@ def get_spark(app_name: str = "moospark", shuffle_partitions: int | None = None)
         # stage too (default is partial-only), with the vectorized
         # row-batch variant: the high-cardinality GROUP BY family is
         # final-agg-bound once the partial pass stops reducing.
-        # Measured (tools/probe_ab_10m.py, heavy-8 ClickBench subset
-        # at 10M rows, fresh-JVM interleaved cells, median of 3
+        # Measured (r5 A/B recorded in BASELINE.md, heavy-8 ClickBench
+        # subset at 10M rows, fresh-JVM interleaved cells, median of 3
         # rounds): base 6.21 s -> 5.30 s, better in every round;
         # scan-split 16 MB and shuffle-width 64 variants were noise.
         .config("spark.sql.codegen.aggregate.map.twolevel.partialOnly", "false")
@@ -154,7 +154,7 @@ def get_spark(app_name: str = "moospark", shuffle_partitions: int | None = None)
     # Shuffle/spill scratch on RAM-backed tmpfs when available: local
     # mode writes every exchange to spark.local.dir, and /tmp here is
     # spinning-VM block storage. Interleaved A/B at 10M rows
-    # (tools/probe_ab_10m.py, min-of-3 medians over 3 rounds): heavy
+    # (r5, recorded in BASELINE.md; min-of-3 medians over 3 rounds): heavy
     # agg subset 8.12s (/tmp) -> 7.07s (/dev/shm), uniform across the
     # shuffle-bound queries; compression stays ON (lz4 off was a wash
     # at best, 2x worse tail at worst). Cluster analog: point
@@ -169,12 +169,6 @@ def get_spark(app_name: str = "moospark", shuffle_partitions: int | None = None)
         builder = builder.config("spark.local.dir", shm)
     except OSError:
         pass  # no tmpfs (or read-only) — Spark's default scratch dir
-    # Ad-hoc conf overrides for A/B perf probing (tools/probe_*.py):
-    # MOOSPARK_EXTRA_CONF="spark.local.dir=/dev/shm/x;spark.shuffle.compress=false"
-    extra = os.environ.get("MOOSPARK_EXTRA_CONF", "")
-    for pair in filter(None, extra.split(";")):
-        k, _, v = pair.partition("=")
-        builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")

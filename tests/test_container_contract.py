@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import base64
 import os
+import re
 import subprocess
 import sys
 import time
@@ -97,6 +98,55 @@ def get(port, query=None, user=None, password=None, path="/", **params):
         req.add_header("Authorization", f"Basic {cred}")
     with urllib.request.urlopen(req, timeout=60) as r:
         return r.status, r.read()
+
+
+# The deployment settings the package reads from the environment.
+# A new environment knob needs a deliberate edit here: every knob
+# doubles the configurations the suite has to cover.
+DEPLOYMENT_ENV = {
+    "SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY", "MOOSPARK_WAREHOUSE",
+    "MOOSPARK_USER_FILES_DIR", "MOOSPARK_FORMAT_SCHEMA_PATH",
+    "HOST", "PORT", "NATIVE_PORT",
+}
+
+
+# a literal-name read, and any use of the environment at all
+_ENV_READ = re.compile(
+    r"""\b(?:environ\.get|getenv)\(\s*["'](\w+)["']|\benviron\[\s*["'](\w+)["']"""
+)
+_ENV_USE = re.compile(r"\b(?:environ|getenv)\b")
+
+
+def _package_sources():
+    pkg = os.path.join(REPO, "cowsdb_spark")
+    for root, _dirs, files in os.walk(pkg):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path, encoding="utf-8") as fh:
+                    yield os.path.relpath(path, REPO), fh.read()
+
+
+class TestDeploymentSettings:
+    def test_env_reads_are_deployment_settings(self):
+        read, other = {}, []
+        for rel, src in _package_sources():
+            names = [a or b for a, b in _ENV_READ.findall(src)]
+            for name in names:
+                read.setdefault(name, []).append(rel)
+            if len(_ENV_USE.findall(src)) != len(names):
+                other.append(rel)  # e.g. a computed name or dict(os.environ)
+        assert not other, f"environment use that is not a literal read: {other}"
+        unknown = {k: v for k, v in read.items() if k not in DEPLOYMENT_ENV}
+        assert not unknown, f"environment reads outside DEPLOYMENT_ENV: {unknown}"
+        assert set(read) == DEPLOYMENT_ENV
+
+    def test_entrypoint_is_the_only_boot_path(self):
+        mains = [
+            rel for rel, src in _package_sources()
+            if '__name__ == "__main__"' in src
+        ]
+        assert mains == [os.path.join("cowsdb_spark", "__main__.py")]
 
 
 class TestHTTPContract:

@@ -992,17 +992,6 @@ class TestAdviceFixes:
         )
         assert got == b"10\n11\n12\n"
 
-    def test_ivf_cache_bounded(self):
-        from cowsdb_spark.operators import dedup
-
-        dedup._IVF_INDEX_CACHE.clear()
-        for k in range(dedup._IVF_INDEX_CACHE_MAX + 3):
-            dedup._IVF_INDEX_CACHE[(k, 8)] = (None, None, None, None)
-            while len(dedup._IVF_INDEX_CACHE) > dedup._IVF_INDEX_CACHE_MAX:
-                dedup._IVF_INDEX_CACHE.popitem(last=False)
-        assert len(dedup._IVF_INDEX_CACHE) <= dedup._IVF_INDEX_CACHE_MAX
-        dedup._IVF_INDEX_CACHE.clear()
-
 
 class TestCombinatorAlgebra:
     """General stackable aggregate-combinator suffixes

@@ -62,18 +62,6 @@ def main() -> None:
     docs = spark.read.parquet(path)
 
     out: dict = {"n_docs": n_docs, "gen_s": gen_s, "stages": {}}
-    extra = os.environ.get("MOOSPARK_EXTRA_CONF", "")
-    heap = os.environ.get("SPARK_DRIVER_MEMORY", "12g")
-    if extra or heap != "12g":
-        # conf overrides for larger-than-default points: at 30M docs
-        # the 12g/32-shuffle-partition local envelope OOMs in the
-        # bucket-group aggregate (AQE can only coalesce partitions
-        # DOWN from spark.sql.shuffle.partitions, never split up, so
-        # per-reducer state grows linearly with the corpus). The
-        # cluster analog is simply more reducers + more aggregate
-        # executor heap — recorded here so the artifact is honest
-        # about what the run used.
-        out["conf_overrides"] = {"MOOSPARK_EXTRA_CONF": extra, "driver_memory": heap}
 
     def stage(name: str, fn):
         r0, w0 = _shuffle_totals(spark)
