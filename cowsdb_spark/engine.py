@@ -11,7 +11,6 @@ serializers around ``spark.sql``.
 
 from __future__ import annotations
 
-import concurrent.futures
 import hashlib
 import os
 import struct as _struct
@@ -272,27 +271,10 @@ class Engine:
         # global USE where possible.
         self._lock = threading.RLock()
         self._opfn_counter = 0  # pipeline-table-function view names
-        # Serializes the brief set-conf -> force-physical-plan ->
-        # restore-conf windows of the static-planning fast path: two
-        # concurrent readers could otherwise interleave so that one
-        # reads the other's temporary adaptive=false as its "previous"
-        # value and restores it permanently (observed as an
-        # order-dependent test flake). Planning is ms-scale; query
-        # EXECUTION happens outside the window and stays concurrent.
+        # Serializes the brief AQE-off planning windows (_plan_static).
+        # Planning is ms-scale; query EXECUTION happens outside the
+        # window and stays concurrent.
         self._conf_lock = threading.Lock()
-        # Prepared-statement pipelining: after serving a plan-cache
-        # hit, one background thread pre-plans the NEXT Dataset for
-        # that statement so a repeated query pays ~0 planning latency
-        # on arrival (measured ~40 ms/hit at 10M: ~11 ms QueryExecution
-        # machinery + ~15-30 ms physical planning over a parquet scan).
-        # The prebuilt Dataset has executed nothing — planning only —
-        # so every shuffle still runs when it is collected; this is
-        # statement preparation, not result caching. Slots die with
-        # the cache entry (generation bump / eviction / view guard).
-        self._prebuilt: dict[str, list] = {}
-        self._prep_pool = concurrent.futures.ThreadPoolExecutor(
-            max_workers=1, thread_name_prefix="moospark-prep"
-        )
 
     # ------------------------------------------------------------ sessions
 
@@ -1448,7 +1430,6 @@ class Engine:
                     # stale entry and re-plan
                     with self._lock:
                         self._plan_cache.pop(key, None)
-                        self._prebuilt.pop(key, None)
                     hit = None
                 if hit is not None:
                     # Two reuse tiers, both execution-honest:
@@ -1496,16 +1477,6 @@ class Engine:
                         if hot.get("state") == "safe":
                             self._reset_shuffle_outputs(hot["ids"])
                             return hit_df
-                    pre = None
-                    with self._lock:
-                        lst = self._prebuilt.get(key)
-                        if lst:
-                            pre = lst.pop()
-                    # pipeline the next run's planning regardless of
-                    # whether this one was served from the slot
-                    self._schedule_prebuild(key, hit_df, mode)
-                    if pre is not None:
-                        return pre
                     return self._rebuild_from_cache(hit_df, mode)
             df, mode = self._plan_select_with_mode(prepared)
             if key is not None:
@@ -1515,9 +1486,7 @@ class Engine:
                     )
                     self._plan_cache.move_to_end(key)
                     while len(self._plan_cache) > self._plan_cache_max:
-                        old_key, _ = self._plan_cache.popitem(last=False)
-                        self._prebuilt.pop(old_key, None)
-                self._schedule_prebuild(key, df, mode)
+                        self._plan_cache.popitem(last=False)
             return df
         except EngineError:
             raise
@@ -1545,16 +1514,33 @@ class Engine:
     # leaf.
     SMALL_SCAN_BYTES = 64 << 20
 
-    def _plan_select(self, prepared: str) -> DataFrame:
-        """spark.sql + the small-scan fast path (static planning).
+    def _plan_static(self, df: DataFrame, parts=None) -> None:
+        """Bake a non-adaptive physical plan into ``df``: under
+        ``_conf_lock``, turn AQE off (and set the shuffle width to
+        ``parts``, if given), force ``executedPlan()`` and restore both
+        confs. spark.sql is analysis-eager only, so physical planning
+        happens here, and QueryExecution memoizes it: the DataFrame
+        keeps its static plan after the confs flip back.
 
-        The re-plan forces physical planning while AQE is off, so the
-        returned DataFrame keeps its non-adaptive executedPlan after
-        the conf flips back (QueryExecution memoizes it). A concurrent
-        read landing inside the window would also plan statically —
-        valid, just not adaptive — so no lock is taken on this path.
+        The lock keeps two windows from interleaving: one would read
+        the other's temporary values as its "previous" ones and restore
+        them for good (observed as an order-dependent test flake).
+        Other statements plan without the lock: one landing inside a
+        window plans statically too — valid, just not adaptive. So no
+        plan-mode decision may read these confs outside the lock.
         """
-        return self._plan_select_with_mode(prepared)[0]
+        conf = self.spark.conf
+        with self._conf_lock:
+            prev = conf.get("spark.sql.adaptive.enabled")
+            prev_parts = conf.get("spark.sql.shuffle.partitions")
+            conf.set("spark.sql.adaptive.enabled", "false")
+            if parts is not None:
+                conf.set("spark.sql.shuffle.partitions", str(parts))
+            try:
+                df._jdf.queryExecution().executedPlan()  # noqa: SLF001
+            finally:
+                conf.set("spark.sql.adaptive.enabled", prev)
+                conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     def _plan_select_with_mode(self, prepared: str) -> tuple[DataFrame, str]:
         """Build + fast-path a statement; returns (df, mode) where
@@ -1585,8 +1571,6 @@ class Engine:
             except Exception:
                 df = df0
         try:
-            if self.spark.conf.get("spark.sql.adaptive.enabled") != "true":
-                return df, "plain"
             size = self._leaf_scan_bytes(df)
             if size is None or size > self.SMALL_SCAN_BYTES:
                 if self._is_single_shuffle_agg(df):
@@ -1606,13 +1590,7 @@ class Engine:
                     # _is_single_shuffle_agg).  Shuffle width stays at
                     # the session default, the same width AQE starts
                     # from.
-                    with self._conf_lock:
-                        prev = self.spark.conf.get("spark.sql.adaptive.enabled")
-                        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-                        try:
-                            df._jdf.queryExecution().executedPlan()  # noqa: SLF001
-                        finally:
-                            self.spark.conf.set("spark.sql.adaptive.enabled", prev)
+                    self._plan_static(df)
                     return df, "static"
                 return df, "plain"
             # Static planning loses AQE's partition coalescing, so pick
@@ -1622,19 +1600,12 @@ class Engine:
             # at 32 made the static path a net LOSS (10.3s vs 6.7s
             # sweep); sizing it statically keeps both the no-barrier
             # win and the small-shuffle win.
-            with self._conf_lock:
-                prev_parts = self.spark.conf.get("spark.sql.shuffle.partitions")
-                parts = max(1, min(int(prev_parts), (size >> 24) + 1))
-                self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-                self.spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-                try:
-                    # physical planning hasn't run yet (spark.sql is
-                    # analysis-eager only); forcing it now, with AQE off,
-                    # bakes the static plan into this QueryExecution
-                    df._jdf.queryExecution().executedPlan()  # noqa: SLF001
-                finally:
-                    self.spark.conf.set("spark.sql.adaptive.enabled", "true")
-                    self.spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            with self._conf_lock:  # a window may hold a narrowed width
+                default_parts = int(
+                    self.spark.conf.get("spark.sql.shuffle.partitions")
+                )
+            parts = max(1, min(default_parts, (size >> 24) + 1))
+            self._plan_static(df, parts)
             return df, f"small:{parts}"
         except Exception:  # noqa: BLE001 — fast path must never break a query
             return df, "plain"
@@ -1806,20 +1777,7 @@ class Engine:
             )
             try:
                 df = self.spark.sql(sql)
-                with self._conf_lock:
-                    prev = self.spark.conf.get("spark.sql.adaptive.enabled")
-                    prev_parts = self.spark.conf.get(
-                        "spark.sql.shuffle.partitions"
-                    )
-                    self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-                    self.spark.conf.set("spark.sql.shuffle.partitions", "8")
-                    try:
-                        df._jdf.queryExecution().executedPlan()  # noqa: SLF001
-                    finally:
-                        self.spark.conf.set("spark.sql.adaptive.enabled", prev)
-                        self.spark.conf.set(
-                            "spark.sql.shuffle.partitions", prev_parts
-                        )
+                self._plan_static(df, 8)
                 got = df.first()[0]
             except Exception:  # noqa: BLE001 — fall back to the full plan
                 return None
@@ -1953,19 +1911,8 @@ class Engine:
         )
         df2 = DataFrame(jdf, hit_df.sparkSession)
         if mode != "plain":
-            with self._conf_lock:
-                prev = self.spark.conf.get("spark.sql.adaptive.enabled")
-                prev_parts = self.spark.conf.get("spark.sql.shuffle.partitions")
-                self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-                if mode.startswith("small:"):
-                    self.spark.conf.set(
-                        "spark.sql.shuffle.partitions", mode.split(":", 1)[1]
-                    )
-                try:
-                    df2._jdf.queryExecution().executedPlan()  # noqa: SLF001
-                finally:
-                    self.spark.conf.set("spark.sql.adaptive.enabled", prev)
-                    self.spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            parts = mode.split(":", 1)[1] if mode.startswith("small:") else None
+            self._plan_static(df2, parts)
         return df2
 
     def _hot_reuse_info(self, hit_df: DataFrame):
@@ -2019,35 +1966,10 @@ class Engine:
                 # executes from scratch.
                 pass
 
-    def _schedule_prebuild(self, key: str, hit_df: DataFrame, mode: str) -> None:
-        """Queue a background pre-plan of the next Dataset for this
-        cache entry (one slot per key). Failures are swallowed — the
-        slot is an optimization; the inline path always works."""
-
-        def work():
-            try:
-                with self._lock:
-                    if key not in self._plan_cache or self._prebuilt.get(key):
-                        return
-                df = self._rebuild_from_cache(hit_df, mode)
-                with self._lock:
-                    if key in self._plan_cache:
-                        slot = self._prebuilt.setdefault(key, [])
-                        if len(slot) < 1:
-                            slot.append(df)
-            except Exception:  # noqa: BLE001 — prebuild must never break queries
-                pass
-
-        try:
-            self._prep_pool.submit(work)
-        except RuntimeError:
-            pass  # pool shut down (interpreter exit)
-
     def _invalidate_plans(self) -> None:
         with self._lock:
             self._catalog_gen += 1
             self._plan_cache.clear()
-            self._prebuilt.clear()
 
     def _run_insert(self, sess: UserSession, sql: str) -> None:
         self._invalidate_plans()

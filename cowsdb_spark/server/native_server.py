@@ -17,6 +17,7 @@ import re
 import socket
 import struct
 import threading
+import time
 import zlib
 
 from ..engine import Engine, EngineError
@@ -301,6 +302,7 @@ class NativeServer:
         if m:
             self._handle_insert(client, r, state, m)
             return
+        t_start = time.time()
         try:
             df, _fmt, _settings2, elapsed = self.engine.execute_to_df(
                 query,
@@ -309,11 +311,24 @@ class NativeServer:
                 database=state.get("database"),
                 params=qparams or None,
             )
+            n_rows = 0
             if df is not None:
                 res = QueryResult.from_dataframe(df, elapsed=elapsed, stream=False)
+                res.rows = list(res.rows)
+                n_rows = len(res.rows)
                 client.sendall(self._data_packet(res, state))
+            # logged before END_OF_STREAM, so the client's next query
+            # already sees this one in system.query_log
+            self.engine._log_query(  # noqa: SLF001
+                state["user"], state["password"], query, elapsed, n_rows,
+                "QueryFinish", "",
+            )
             client.sendall(write_varint(ServerPacket.END_OF_STREAM))
         except EngineError as e:
+            self.engine._log_query(  # noqa: SLF001
+                state["user"], state["password"], query,
+                time.time() - t_start, 0, "ExceptionWhileProcessing", str(e),
+            )
             out = bytearray()
             out += write_varint(ServerPacket.EXCEPTION)
             out += write_varstr(str(e))

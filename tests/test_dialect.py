@@ -923,7 +923,7 @@ class TestGroupByFdeps:
 
 class TestSmallScanFastPath:
     """Small inputs plan statically (no AdaptiveSparkPlan); the session
-    AQE conf is restored afterwards (engine.py Engine._plan_select)."""
+    AQE conf is restored afterwards (engine.py Engine._plan_static)."""
 
     def test_static_plan_and_conf_restored(self, spark):
         from cowsdb_spark.engine import Engine
@@ -942,6 +942,25 @@ class TestSmallScanFastPath:
         assert ", 1)," in plan or "Exchange" not in plan
         assert spark.conf.get("spark.sql.shuffle.partitions") == before_parts
         assert df.count() == 3
+
+    def test_open_aqe_window_does_not_pin_plain_mode(self, spark):
+        # AQE off on the session stands in for another request's open
+        # planning window at the moment this statement is planned; the
+        # cached entry must not be demoted to AQE planning for good
+        from cowsdb_spark.engine import Engine
+
+        eng = Engine(spark)
+        spark.range(0, 100).createOrReplaceTempView("fp_race")
+        sql = "SELECT id % 5 AS k, COUNT(*) AS c FROM fp_race GROUP BY id % 5"
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            eng.execute_to_df(sql)
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+        df = eng.execute_to_df(sql)[0]
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "AdaptiveSparkPlan" not in plan
+        assert df.count() == 5
 
 
 class TestAdviceFixes:

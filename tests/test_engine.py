@@ -1000,6 +1000,52 @@ class TestPlanCacheGuards:
         all_after = engine.spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
         assert all_after > all_before, "cache hit executed zero Spark jobs"
 
+    def test_hot_tier_reuses_the_dataset(self, engine):
+        # a static plan without broadcasts/subqueries takes the hot
+        # tier: every hit hands back the cached Dataset itself
+        sql = "SELECT number % 7 AS k, count() AS c FROM numbers(100000) GROUP BY k ORDER BY k"
+        first = engine.execute_to_df(sql)[0]
+        rows = first.collect()
+        for _ in range(2):
+            hit = engine.execute_to_df(sql)[0]
+            assert hit is first
+            assert hit.collect() == rows
+
+    def test_warm_tier_rebuilds_the_dataset(self, engine):
+        # a scalar subquery memoizes its result inside the plan, so the
+        # hit is rebuilt from the cached optimized plan: a new Dataset
+        # whose jobs run again
+        sql = (
+            "SELECT count() AS c FROM numbers(1000) "
+            "WHERE number > (SELECT avg(number) FROM numbers(1000))"
+        )
+        first = engine.execute_to_df(sql)[0]
+        rows = first.collect()
+        assert rows[0][0] == 500
+        sched = engine.spark.sparkContext._jsc.sc().dagScheduler()
+        seen = [first]
+        for _ in range(2):
+            before = sched.nextJobId()
+            hit = engine.execute_to_df(sql)[0]
+            assert all(hit is not d for d in seen)
+            seen.append(hit)
+            assert hit.collect() == rows
+            assert sched.nextJobId() > before, "warm hit executed zero Spark jobs"
+
+    def test_engine_and_hits_start_no_thread(self, spark):
+        import threading
+
+        before = {t.ident for t in threading.enumerate()}
+        eng = Engine(spark)
+        for _ in range(3):
+            assert eng.execute("SELECT sum(number) AS s FROM numbers(100)") == b"4950\n"
+            assert eng.execute(
+                "SELECT number % 3 AS k, count() AS c FROM numbers(90) "
+                "GROUP BY k ORDER BY k"
+            ) == b"0\t30\n1\t30\n2\t30\n"
+        new = [t.name for t in threading.enumerate() if t.ident not in before]
+        assert not new, new
+
 
 class TestAttachDetach:
     """DETACH TABLE hides a table (data kept, invisible to queries

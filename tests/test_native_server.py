@@ -379,6 +379,22 @@ class TestQueries:
         c1.close()
         c2.close()
 
+    def test_query_log_records_native_queries(self, native_port):
+        c = Client(native_port, user="nat_qlog")
+        _, rows = c.query("SELECT number FROM numbers(3)")
+        assert len(rows) == 3
+        with pytest.raises(RuntimeError):
+            c.query("SELECT * FROM missing_nat_qlog")
+        _, rows = c.query(
+            "SELECT type, query, result_rows FROM system.query_log "
+            "ORDER BY event_time"
+        )
+        assert rows == [
+            ("QueryFinish", "SELECT number FROM numbers(3)", 3),
+            ("ExceptionWhileProcessing", "SELECT * FROM missing_nat_qlog", 0),
+        ]
+        c.close()
+
     def test_dates_and_timestamps(self, native_port):
         import datetime
 
